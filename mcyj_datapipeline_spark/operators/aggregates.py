@@ -13,6 +13,30 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def sort_on_one_partition(agg: DataFrame, *order) -> DataFrame:
+    """Finish a small aggregate's global sort in one task.
+
+    ``agg.orderBy(...)`` over an aggregate plans a range exchange, which
+    AQE runs as three jobs (a sampling job for the range bounds, the
+    sort shuffle, the result) on top of the aggregate's own map job.
+    ``coalesce(1)`` is narrow: the aggregate's final stage runs in one
+    task, the sort needs no exchange, and the query runs in two jobs.
+
+    Use it only where the aggregate is keyed by a declared dashboard
+    dimension (county, agency, status, event type: tens to thousands of
+    rows at any input size). Never use it for high-cardinality keys
+    (raw words, part keys, phrases, document ids): their result grows
+    with the input, and one task would then hold all of it. Those keep
+    a plain ``orderBy`` (``explode_count``, ``duplicate_keys``,
+    ``prefix_search``).
+
+    For ``plans.website.nest_agencies`` the single task also runs the
+    final ``collect_list`` merge, so it carries the filtered document
+    list. The caller collects that list or writes it as one
+    ``agencies_data.json`` anyway, so it ends in one place either way."""
+    return agg.coalesce(1).orderBy(*order)
+
+
 def nest_documents_per_agency(
     docs: DataFrame,
     key: str = "agency_id",
@@ -48,17 +72,14 @@ def group_count_sorted(
     """A3 (reference FacilitiesPage.jsx:41-60): count per group value,
     descending, null key → 'Unknown'."""
     g = F.coalesce(F.col(group_col), F.lit(null_label)).alias(group_col)
-    return (
-        df.select(g)
-        .groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), F.col(group_col))
-    )
+    counts = df.select(g).groupBy(group_col).agg(F.count(F.lit(1)).alias("count"))
+    return sort_on_one_partition(counts, F.desc("count"), F.col(group_col))
 
 
 def distinct_sorted(df: DataFrame, col: str) -> DataFrame:
     """A6 (reference App.jsx:133-149): dropdown domain."""
-    return df.select(col).where(F.col(col).isNotNull()).distinct().orderBy(col)
+    domain = df.select(col).where(F.col(col).isNotNull()).distinct()
+    return sort_on_one_partition(domain, col)
 
 
 def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
@@ -100,7 +121,8 @@ def explode_count(
 
 def value_distribution(df: DataFrame, col: str) -> DataFrame:
     """A9 (reference update_violation_levels.py:529-533)."""
-    return df.groupBy(col).agg(F.count(F.lit(1)).alias("count")).orderBy(col)
+    counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("count"))
+    return sort_on_one_partition(counts, col)
 
 
 def pre_post_filter_counts(

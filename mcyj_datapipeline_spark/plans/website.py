@@ -11,6 +11,9 @@ client-side array walk.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -19,7 +22,10 @@ from mcyj_datapipeline_spark.functions.textfn import (
     keywords_from_json,
     parse_bool_string,
 )
-from mcyj_datapipeline_spark.operators.aggregates import reduce_keywords
+from mcyj_datapipeline_spark.operators.aggregates import (
+    reduce_keywords,
+    sort_on_one_partition,
+)
 
 # helpers.js:98 — statuses considered "active" by the dashboard.
 ACTIVE_LICENSE_STATUSES = [
@@ -114,36 +120,41 @@ def interactive_filter(
 ) -> DataFrame:
     """The dashboard filter chain P6–P12 (reference App.jsx:218-348) as
     one conjunctive predicate — every clause is sargable and pushed to
-    the scan by Catalyst."""
-    df = flat
+    the scan by Catalyst. The clauses are ANDed into one ``Column`` and
+    applied with a single ``filter``: each ``filter`` call builds a new
+    Dataset and runs an eager analysis, and Catalyst's CombineFilters
+    would merge chained calls into an equivalent predicate anyway."""
+    clauses: list[Column] = []
     if license_statuses:
-        df = df.filter(F.col("LicenseStatus").isin(license_statuses))  # P6
+        clauses.append(F.col("LicenseStatus").isin(license_statuses))  # P6
     if agency_type:
-        df = df.filter(F.col("AgencyType") == agency_type)  # P7
+        clauses.append(F.col("AgencyType") == agency_type)  # P7
     if county:
-        df = df.filter(F.col("County") == county)  # P7
+        clauses.append(F.col("County") == county)  # P7
     if last_n_months is not None:  # P8
-        df = df.filter(
+        clauses.append(
             F.col("date_iso") >= F.add_months(F.current_date(), -last_n_months)
         )
     if sir_only:
-        df = df.filter(F.col("is_special_investigation"))  # P2
+        clauses.append(F.col("is_special_investigation"))  # P2
         if severity:
-            df = df.filter(F.col("level").isin(severity))  # P9
+            clauses.append(F.col("level").isin(severity))  # P9
     if staffing_filter:  # P10: "yes_high" → problem + confidence
         problem, confidence = staffing_filter.split("_", 1)
-        df = df.filter(
+        clauses.append(
             (F.col("staffing_problem") == (problem == "yes"))
             & (F.col("confidence") == confidence)
         )
     if keywords_any:  # P11: case-insensitive array overlap
-        df = df.filter(
+        clauses.append(
             F.arrays_overlap(
                 F.transform(F.col("keywords"), F.lower),
                 F.array(*[F.lit(k.lower()) for k in keywords_any]),
             )
         )
-    return df
+    if not clauses:
+        return flat
+    return flat.filter(functools.reduce(operator.and_, clauses))
 
 
 def nest_agencies(flat: DataFrame, doc_cols: list[str]) -> DataFrame:
@@ -151,12 +162,9 @@ def nest_agencies(flat: DataFrame, doc_cols: list[str]) -> DataFrame:
     drop agencies with no surviving docs (group-then-filter equivalence
     — we filter first, so empty groups simply don't exist)."""
     struct_col = F.struct(F.col("date_iso"), *[F.col(c) for c in doc_cols])
-    return (
-        flat.groupBy("agency_id")
-        .agg(
-            F.reverse(F.sort_array(F.collect_list(struct_col))).alias("documents"),
-            F.count(F.lit(1)).alias("total_reports"),
-            F.max("agency_name").alias("agency_name"),
-        )
-        .orderBy("agency_name", "agency_id")
+    nested = flat.groupBy("agency_id").agg(
+        F.reverse(F.sort_array(F.collect_list(struct_col))).alias("documents"),
+        F.count(F.lit(1)).alias("total_reports"),
+        F.max("agency_name").alias("agency_name"),
     )
+    return sort_on_one_partition(nested, "agency_name", "agency_id")

@@ -105,22 +105,52 @@ def get_spark(
         # type) as long; io.read_table converts them to microsecond
         # timestamps at the scan boundary.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark captures the Python call site of every DataFrame and
+        # `functions` call (4-7 py4j round trips and a failed `import
+        # IPython` each) so that error messages can name it. Off, a
+        # DataFrame build makes about half the driver->JVM calls (a bar
+        # chart ~155 -> ~85, a fold night ~11,800 -> ~6,000). The cost:
+        # Spark error messages lose their Python "DataFrame context"
+        # (file:line of the failing call); the JVM stack trace and the
+        # error class stay. To debug a failing plan, set it back to true
+        # through extra_conf or SPARK_GRAFT_EXTRA_CONF on the process's
+        # first session (PySpark reads it once per process).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Measurement seam: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies
     # session confs without code edits — used for interleaved conf
     # A/Bs (fresh JVM per variant) where editing the factory between
     # reps would invalidate the comparison. Unset by default; explicit
-    # extra_conf (below) wins over it.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in env_conf.split(";"):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+    # extra_conf (below) wins over it. Empty segments (a trailing ';')
+    # are skipped; a pair without '=' raises instead of being dropped,
+    # so a typo cannot run the default conf while the caller believes
+    # the variant is in effect.
+    for k, v in parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")):
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def parse_extra_conf(spec: str) -> list[tuple[str, str]]:
+    """``"k=v;k2=v2"`` → ``[("k", "v"), ("k2", "v2")]``, stripped.
+
+    Raises ``ValueError`` naming the pair when a non-empty pair has no
+    ``=``; empty or blank segments are ignored."""
+    pairs = []
+    for pair in spec.split(";"):
+        if not pair.strip():
+            continue
+        if "=" not in pair:
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF: pair {pair.strip()!r} has no '=' "
+                "(expected 'key=value;key2=value2')"
+            )
+        k, v = pair.split("=", 1)
+        pairs.append((k.strip(), v.strip()))
+    return pairs
 
 
 _SCRATCH_DIRS: dict[str, str] = {}

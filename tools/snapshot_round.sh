@@ -6,6 +6,7 @@
 #                                must end in the "oracles match" summary)
 #   SPOT_r<round>_a.log        — seeded spot-audit, seed=<round>
 #   SPOT_r<round>_b.log        — seeded spot-audit, seed=<round>+100
+# and it fails unless `python3 -m pytest perfbench/tests` passes.
 #
 # Round 4 shipped a 0-byte GATE log because `tee` ran but the gate was
 # interrupted; every artifact here is size- and content-checked so an
@@ -44,6 +45,12 @@ fi
 head_sha="$(git rev-parse HEAD)"
 stamp="ritual-head: ${head_sha}  cut: $(date -u +%Y-%m-%dT%H:%M:%SZ)"
 echo "$stamp"
+
+# The benchmark's own tests (planted facts, oracles, the structure
+# check) run first: they are cheap, and a benchmark that no longer
+# checks its answers makes every later timing claim meaningless.
+# `set -e` fails the ritual on a non-zero exit.
+python3 -m pytest perfbench/tests -q
 
 gate="GATE_r${round}.log"
 spot_a="SPOT_r${round}_a.log"

@@ -14,8 +14,8 @@ Usage: python tools/test_tier_report.py [LOG] [--tests FILE]
 
 from __future__ import annotations
 
+import argparse
 import re
-import sys
 from collections import defaultdict
 
 LINE = re.compile(
@@ -23,11 +23,16 @@ LINE = re.compile(
 )
 
 
-def main() -> int:
-    path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/pytest_durations_r13.log"
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("log", nargs="?", default="/tmp/pytest_durations_r13.log")
+    ap.add_argument(
+        "--tests", metavar="FILE", help="also write per-TEST durations to FILE"
+    )
+    args = ap.parse_args(argv)
     per_file: dict[str, float] = defaultdict(float)
     per_test: dict[str, float] = defaultdict(float)
-    with open(path) as fh:
+    with open(args.log) as fh:
         for line in fh:
             m = LINE.match(line)
             if not m:
@@ -40,13 +45,13 @@ def main() -> int:
     cum = 0.0
     for fname, sec in sorted(per_file.items(), key=lambda kv: -kv[1]):
         cum += sec
-        print(f"{sec:8.1f}s  {100 * cum / total:5.1f}%  {fname}")
-    if "--tests" in sys.argv:
-        out = sys.argv[sys.argv.index("--tests") + 1]
-        with open(out, "w") as fh:
+        share = 100 * cum / total if total else 0.0
+        print(f"{sec:8.1f}s  {share:5.1f}%  {fname}")
+    if args.tests:
+        with open(args.tests, "w") as fh:
             for name, sec in sorted(per_test.items(), key=lambda kv: -kv[1]):
                 fh.write(f"{sec:8.1f}s  {name}\n")
-        print(f"# per-test detail -> {out}")
+        print(f"# per-test detail -> {args.tests}")
     return 0
 
 
